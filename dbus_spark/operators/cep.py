@@ -66,7 +66,8 @@ def classify(
     for name, pred in symbols.items():
         cond = F.expr(pred) if isinstance(pred, str) else pred
         expr = F.when(cond, name) if expr is None else expr.when(cond, name)
-    assert expr is not None, "classify() needs at least one symbol"
+    if expr is None:
+        raise ValueError("classify() needs at least one symbol")
     return df.withColumn(sym_col, expr.otherwise(F.lit(default)))
 
 
@@ -95,7 +96,8 @@ def match_sequence(
     is O(rows) regardless of match density, which is what lets the
     same query run on 10^12 turns.
     """
-    assert len(pattern) >= 1
+    if not pattern:
+        raise ValueError("pattern needs at least one element")
     order_cols = [order] if isinstance(order, str) else list(order)
     L = len(pattern)
     w = Window.partitionBy(key).orderBy(*order_cols)
@@ -210,6 +212,16 @@ def _contract_runs(
     )
 
 
+def _check_quantifiers(pattern) -> None:
+    for _, mn, mx in pattern:
+        if mn < 1:
+            raise ValueError(
+                "quantifier min must be >= 1 (runs are non-empty)"
+            )
+        if mx is not None and mx < mn:
+            raise ValueError(f"bad quantifier ({mn},{mx})")
+
+
 def match_quantified(
     df: DataFrame,
     pattern: list[tuple],
@@ -243,10 +255,9 @@ def match_quantified(
     spanning first run start → last run end, plus ``len_i`` columns
     (the matched run length per position).
     """
-    assert len(pattern) >= 1
-    for elem, mn, mx in pattern:
-        assert mn >= 1, "quantifier min must be >= 1 (runs are non-empty)"
-        assert mx is None or mx >= mn, f"bad quantifier ({mn},{mx})"
+    if not pattern:
+        raise ValueError("pattern needs at least one element")
+    _check_quantifiers(pattern)
     order_cols = [order] if isinstance(order, str) else list(order)
     o0 = order_cols[0]
     runs = _contract_runs(df, key, order_cols, ts, sym)
@@ -314,7 +325,8 @@ def funnel(
     collect_list-per-key fold whose per-key arrays would be unbounded
     on a 10^12-turn log.
     """
-    assert len(stages) >= 1
+    if not stages:
+        raise ValueError("funnel() needs at least one stage")
     counts: list[tuple[int, str, int]] = []
     cached: list[DataFrame] = []
     reached: DataFrame | None = None
@@ -1179,7 +1191,8 @@ def streaming_funnel(
     from pyspark.sql.streaming.state import GroupStateTimeout
 
     L = len(stages)
-    assert 1 <= L <= 62
+    if not 1 <= L <= 62:
+        raise ValueError(f"streaming funnel needs 1-62 stages, got {L}")
     mask: Column = F.lit(0)
     for i, (_, pred) in enumerate(stages):
         cond = F.expr(pred) if isinstance(pred, str) else pred
@@ -1539,9 +1552,7 @@ def streaming_match_quantified(
     """
     from pyspark.sql.streaming.state import GroupStateTimeout
 
-    for elem, mn, mx in pattern:
-        assert mn >= 1, "quantifier min must be >= 1 (runs are non-empty)"
-        assert mx is None or mx >= mn, f"bad quantifier ({mn},{mx})"
+    _check_quantifiers(pattern)
     within_us = None
     if within is not None:
         within_us = int(

@@ -39,6 +39,7 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from dbus_spark.operators.text import fingerprint, tokens
+from dbus_spark.session import shuffle_partition_count
 
 
 def _h32(c: Column, hash_fn: str = "md5") -> Column:
@@ -204,7 +205,7 @@ def ngram_jaccard_pairs(
     # test and the DuckDB oracle).
     sh = shingles_exploded_arrow(df, id_col, text_col, n)
     seg = _segment_pairs(
-        sh.select("s", id_col), ["s"], id_col, max_df, emit_self=True
+        sh.select("s", id_col), "s", id_col, max_df, emit_self=True
     )
     agg = seg.groupBy("id_a", "id_b").agg(F.count("*").alias("_cnt"))
     # materialize the aggregated (pair + size) frame ONCE: it feeds
@@ -445,111 +446,162 @@ def _winnow_fingerprints_catalyst(
     )
 
 
+# Pair-chunk cap of both segment kernels: at most this many (a, b)
+# index pairs are live at once, so a quadratic-hot segment streams out
+# in bounded slices instead of one pair list.
+CHUNK = 4_000_000
+
+
+def _whole_segments(frames, seg_key):
+    """Re-cut a partition's key-sorted batches into frames that hold
+    only whole segments. ``seg_key(frame)`` gives each row's segment
+    identity; the open segment at the end of a batch is carried into
+    the next batch and flushed after the last one, so the resident
+    input is one batch plus the largest segment, never the whole
+    partition. Empty batches are skipped and no yielded frame is
+    empty."""
+    import numpy as np
+    import pandas as pd
+
+    def _cat(parts):
+        if len(parts) == 1:
+            return parts[0]
+        return pd.concat(parts, ignore_index=True)
+
+    carry: list = []  # pieces of the open segment, all of one key
+    carry_key = None
+    for pdf in frames:
+        if not len(pdf):
+            continue
+        k = seg_key(pdf)
+        change = np.flatnonzero(k[1:] != k[:-1])
+        cut = int(change[-1]) + 1 if len(change) else 0  # last segment
+        if carry and cut == 0 and k[0] == carry_key:
+            carry.append(pdf)
+            continue
+        done = carry + [pdf.iloc[:cut]] if cut else carry
+        if done:
+            yield _cat(done)
+        carry, carry_key = [pdf.iloc[cut:]], k[-1]
+    if carry:
+        yield _cat(carry)
+
+
+def _segment_runs(key: "object") -> tuple:
+    """``(starts, lens, seg_of_row, pos)`` of the runs of equal values
+    in a sorted key array: each run's first row and length, every
+    row's run number and its offset inside the run."""
+    import numpy as np
+
+    n = len(key)
+    starts = np.concatenate([[0], np.flatnonzero(key[1:] != key[:-1]) + 1])
+    lens = np.diff(np.concatenate([starts, [n]]))
+    seg_of_row = np.repeat(np.arange(len(starts)), lens)
+    return starts, lens, seg_of_row, np.arange(n) - starts[seg_of_row]
+
+
+def _pair_chunks(rep: "object", base: "object"):
+    """Yield ``(a_idx, b_idx)`` index arrays that pair every row ``i``
+    with rows ``base[i] .. base[i] + rep[i] - 1``, in chunks of at most
+    ``CHUNK`` pairs (a row whose ``rep`` alone exceeds CHUNK is a chunk
+    of its own). The repeat/offset trick over run lengths: no Python
+    per pair or per segment."""
+    import numpy as np
+
+    n = len(rep)
+    csum = np.concatenate([[0], np.cumsum(rep)])
+    idx_t = np.int32 if n < (1 << 31) else np.int64
+    lo = 0
+    while lo < n:
+        hi = int(np.searchsorted(csum, csum[lo] + CHUNK, side="right")) - 1
+        hi = min(max(hi, lo + 1), n)
+        t = int(csum[hi] - csum[lo])
+        if t:
+            r = rep[lo:hi]
+            a_idx = np.repeat(np.arange(lo, hi, dtype=idx_t), r)
+            off = np.repeat((csum[lo:hi] - csum[lo]).astype(idx_t), r)
+            yield a_idx, base[a_idx] + (np.arange(t, dtype=idx_t) - off)
+        lo = hi
+
+
+def _sorted_segments(df: DataFrame, seg: Column, sort_col: str) -> DataFrame:
+    """Shuffle ``df`` on the segment identity ``seg`` and sort each
+    partition on ``sort_col``: every segment becomes one contiguous
+    run of one partition, ready for :func:`_whole_segments`.
+
+    EXPLICIT partition count: a bare repartition(cols) is an AQE
+    coalescing target, and this shuffle's byte size wildly
+    understates the downstream work (pair enumeration is quadratic
+    in segment length) — measured on sf1.0, AQE folded the stream to
+    13 partitions and serialized the hot buckets' grids (guide §2.5:
+    partition by work, not bytes). repartition(N, cols) pins it; N
+    follows the session's shuffle sizing, so it scales with the
+    cluster rather than the local core count."""
+    n_part = shuffle_partition_count(df.sparkSession)
+    return df.repartition(n_part, seg).sortWithinPartitions(sort_col)
+
+
+def _segment_pair_gen(
+    key_col: str, id_col: str, max_df: int | None, emit_self: bool
+):
+    """The :func:`_segment_pairs` partition kernel, a ``mapInPandas``
+    generator over ``key_col``-sorted batches."""
+    import numpy as np
+    import pandas as pd
+
+    def gen(it):
+        empty, emitted = None, False
+        for pdf in _whole_segments(it, lambda p: p[key_col].to_numpy()):
+            n = len(pdf)
+            _, lens, seg_of_row, pos = _segment_runs(pdf[key_col].to_numpy())
+            seg_len = lens[seg_of_row]
+            alive = np.ones(n, bool) if max_df is None else seg_len <= max_df
+            rep = np.where(alive, seg_len - pos - 1, 0)
+            ids = pdf[id_col].to_numpy()
+            empty = ids[:0]
+            if emit_self and alive.any():
+                emitted = True
+                yield pd.DataFrame({"id_a": ids[alive], "id_b": ids[alive]})
+            for a_idx, b_idx in _pair_chunks(rep, np.arange(n) + 1):
+                ia, ib = ids[a_idx], ids[b_idx]
+                emitted = True
+                yield pd.DataFrame(
+                    {"id_a": np.minimum(ia, ib), "id_b": np.maximum(ia, ib)}
+                )
+        if empty is not None and not emitted and not emit_self:
+            yield pd.DataFrame({"id_a": empty, "id_b": empty})
+
+    return gen
+
+
 def _segment_pairs(
     keyed: DataFrame,
-    key_cols: list[str],
+    key_col: str,
     id_col: str,
     max_df: int | None,
     emit_self: bool = False,
 ) -> DataFrame:
     """Within-segment (id_a < id_b) pair enumeration after ONE shuffle:
-    repartition on the key(s), sort within partitions, and emit every
+    repartition on the key, sort within partitions, and emit every
     same-key pair from a run-length kernel — the self-join-free pair
     generator (the `_bucketed_hamming_pairs` geometry, without a
     sketch verify).  ``max_df`` drops whole segments longer than the
     cap BEFORE pairing: hash partitioning puts every row of a key into
     one segment, so the segment length IS that key's document
     frequency — the df-cut needs no separate aggregation or semi-join.
-    Pair-list construction is chunked so live arrays stay bounded even
-    when one key is quadratic-hot (only possible with max_df=None).
+    The kernel streams whole segments (:func:`_whole_segments`) and
+    chunks pair construction (:func:`_pair_chunks`), so live arrays
+    stay bounded even when one key is quadratic-hot (only possible
+    with max_df=None).
 
     ``emit_self`` additionally emits one (id, id) row per SURVIVING
     input row — a per-doc set-size carrier: downstream, rows with
     id_a == id_b count the doc's surviving keys while id_a < id_b rows
     count shared keys, so one aggregation yields both."""
-    import numpy as np
-    import pandas as pd
-
     id_type = keyed.schema[id_col].dataType.simpleString()
-
-    def gen(it):
-        chunks = [p for p in it if len(p)]
-        if not chunks:
-            return
-        pdf = (
-            chunks[0]
-            if len(chunks) == 1
-            else pd.concat(chunks, ignore_index=True)
-        )
-        n = len(pdf)
-        change = np.zeros(n, dtype=bool)
-        for c in key_cols:
-            a = pdf[c].to_numpy()
-            change[1:] |= a[1:] != a[:-1]
-        starts = np.concatenate([[0], np.flatnonzero(change[1:]) + 1])
-        lens = np.diff(np.concatenate([starts, [n]]))
-        seg_of_row = np.repeat(np.arange(len(starts)), lens)
-        rep = lens[seg_of_row] - (np.arange(n) - starts[seg_of_row]) - 1
-        if max_df is not None:
-            rep = np.where(lens[seg_of_row] <= max_df, rep, 0)
-        ids = pdf[id_col].to_numpy()
-        if emit_self:
-            alive = (
-                lens[seg_of_row] <= max_df
-                if max_df is not None
-                else np.ones(n, dtype=bool)
-            )
-            if alive.any():
-                sid = ids[alive]
-                yield pd.DataFrame({"id_a": sid, "id_b": sid})
-        csum = np.concatenate([[0], np.cumsum(rep)])
-        total = int(csum[-1])
-        if total == 0:
-            if not emit_self:
-                yield pd.DataFrame(
-                    {"id_a": ids[:0], "id_b": ids[:0]}
-                )
-            return
-        CHUNK = 4_000_000
-        lo_row = 0
-        while lo_row < n:
-            hi_row = int(
-                np.searchsorted(csum, csum[lo_row] + CHUNK, side="left")
-            )
-            hi_row = min(max(hi_row, lo_row + 1), n)
-            r = rep[lo_row:hi_row]
-            t = int(r.sum())
-            if t:
-                a_idx = np.repeat(np.arange(lo_row, hi_row), r)
-                w = np.arange(t) - np.repeat(
-                    np.cumsum(np.concatenate([[0], r[:-1]])), r
-                )
-                b_idx = a_idx + 1 + w
-                ia, ib = ids[a_idx], ids[b_idx]
-                yield pd.DataFrame(
-                    {
-                        "id_a": np.minimum(ia, ib),
-                        "id_b": np.maximum(ia, ib),
-                    }
-                )
-            lo_row = hi_row
-
-    # EXPLICIT partition count: a bare repartition(cols) is an AQE
-    # coalescing target, and this shuffle's byte size wildly
-    # understates the downstream work (pair enumeration is quadratic
-    # in segment length) — measured on sf1.0, AQE folded the stream to
-    # 13 partitions and serialized the hot buckets' grids (guide §2.5:
-    # partition by work, not bytes). repartition(N, cols) pins it; N
-    # follows the session's shuffle sizing, so it scales with the
-    # cluster rather than the local core count.
-    n_part = int(
-        keyed.sparkSession.conf.get("spark.sql.shuffle.partitions")
-    )
-    part = keyed.repartition(
-        n_part, *[F.col(c) for c in key_cols]
-    ).sortWithinPartitions(*key_cols)
-    return part.mapInPandas(
-        gen, schema=f"id_a {id_type}, id_b {id_type}"
+    return _sorted_segments(keyed, F.col(key_col), key_col).mapInPandas(
+        _segment_pair_gen(key_col, id_col, max_df, emit_self),
+        schema=f"id_a {id_type}, id_b {id_type}",
     )
 
 
@@ -582,7 +634,7 @@ def winnow_match_pairs(
         F.col("fp").isNotNull()
     )
     pairs = _segment_pairs(
-        base.select("fp", id_col), ["fp"], id_col, max_df
+        base.select("fp", id_col), "fp", id_col, max_df
     )
     return (
         pairs.groupBy("id_a", "id_b")
@@ -643,132 +695,18 @@ def _popcount32(v: "object") -> "object":
     return t[v & np.uint32(0xFFFF)] + t[v >> np.uint32(16)]
 
 
-def _bucketed_hamming_pairs(
-    sk: DataFrame,
-    key_cols: list[str],
+def _hamming_pair_gen(
     id_col: str,
+    sb: int,
+    n_sub: int,
     max_hamming: int | None,
     emit_hamming: bool,
-    n_sub: int = 1,
-    key_widths: list[int] | None = None,
-) -> DataFrame:
-    """Within-bucket pair enumeration + popcount verify, fully
-    vectorized: shuffle the sketch rows once on the bucket key(s),
-    sort within partitions, and emit every same-bucket (id_a < id_b)
-    pair from ONE ``mapInPandas`` pass — pair construction is the
-    repeat/offset trick over segment run-lengths (zero Python per
-    group; a per-group ``applyInPandas`` paid ~0.5 ms × tens of
-    thousands of near-empty buckets, slower than the join it
-    replaced). Hamming is SWAR popcount over the xor'd sketch pairs;
-    ``max_hamming`` filters, ``emit_hamming`` keeps the column.
-    Pair-list construction is chunked so the live arrays stay bounded
-    even when one bucket is quadratic-hot.
-
-    ``n_sub`` > 1 splits every bucket into ``n_sub`` deterministic
-    id-hash sub-blocks and keys the shuffle on (bucket, sub-block
-    PAIR) — a quadratic-hot bucket's pair work then spreads over
-    n_sub·(n_sub+1)/2 partitions instead of serializing on one core
-    (measured: one 13 k-doc block bucket ≈ 90 M pairs on the blocked
-    simhash at sf1.0). Every unordered pair still lands in exactly
-    one (gi ≤ gj) group, so results are identical."""
+):
+    """The :func:`_bucketed_hamming_pairs` partition kernel, a
+    ``mapInPandas`` generator over ``_packed``-sorted batches of
+    ``(_packed, id, simhash)``; ``_packed >> sb`` is the segment."""
     import numpy as np
     import pandas as pd
-
-    out_cols = ["id_a", "id_b"] + (["hamming"] if emit_hamming else [])
-    # null sketches (null text) never join on their bucket in the join
-    # form — drop them before pairing, same semantics
-    sk = sk.filter(F.col("simhash").isNotNull())
-    # ``key_widths`` (bit width per key_col, caller-guaranteed bounds,
-    # all values non-negative): pack (keys, gi, gj, sub) into ONE long
-    # so the Arrow crossing ships 3 columns instead of 7 and the JVM
-    # sort compares one long — measured several-fold on the per-task
-    # read wall at 32 concurrent local tasks. Sort order of the packed
-    # long equals the multi-column (keys..., gi, gj, sub) order
-    # exactly (non-negative fields, high-to-low layout), and the
-    # kernel decodes the same arrays, so results are identical.
-    packed_mode = key_widths is not None
-    sb = max(1, (n_sub - 1).bit_length())  # bits for each of gi/gj/sub
-    if packed_mode:
-        if len(key_widths) != len(key_cols):
-            raise ValueError("key_widths must align with key_cols")
-        if sum(key_widths) + 3 * sb > 62:
-            raise ValueError("packed segment key exceeds 62 bits")
-        kp = F.col(key_cols[0]).cast("long")
-        for c, w in zip(key_cols[1:], key_widths[1:]):
-            kp = F.shiftleft(kp, w).bitwiseOR(F.col(c).cast("long"))
-        if n_sub > 1:
-            sub = F.pmod(F.xxhash64(F.col(id_col)), F.lit(n_sub)).cast(
-                "long"
-            )
-            grp = F.array(
-                *[
-                    F.struct(
-                        F.least(F.col("_sub"), F.lit(q)).alias("gi"),
-                        F.greatest(F.col("_sub"), F.lit(q)).alias("gj"),
-                    )
-                    for q in range(n_sub)
-                ]
-            )
-            sk = (
-                sk.withColumn("_kp", kp)
-                .withColumn("_sub", sub)
-                .select(
-                    "_kp", id_col, "simhash", "_sub",
-                    F.explode(grp).alias("_g"),
-                )
-                .select(
-                    F.shiftleft(
-                        F.shiftleft(
-                            F.shiftleft(F.col("_kp"), sb).bitwiseOR(
-                                F.col("_g.gi").cast("long")
-                            ),
-                            sb,
-                        ).bitwiseOR(F.col("_g.gj").cast("long")),
-                        sb,
-                    )
-                    .bitwiseOR(F.col("_sub"))
-                    .alias("_packed"),
-                    id_col,
-                    "simhash",
-                )
-            )
-        else:
-            sk = sk.select(
-                F.shiftleft(kp, 3 * sb).alias("_packed"),
-                id_col,
-                "simhash",
-            )
-        seg_cols = sort_cols = shuffle_cols = ["_packed"]  # unused below
-    elif n_sub > 1:
-        sub = F.pmod(F.xxhash64(F.col(id_col)), F.lit(n_sub)).cast("int")
-        grp = F.array(
-            *[
-                F.struct(
-                    F.least(F.col("_sub"), F.lit(q)).alias("gi"),
-                    F.greatest(F.col("_sub"), F.lit(q)).alias("gj"),
-                )
-                for q in range(n_sub)
-            ]
-        )
-        sk = (
-            sk.withColumn("_sub", sub)
-            .select(
-                *key_cols, id_col, "simhash", "_sub",
-                F.explode(grp).alias("_g"),
-            )
-            .select(
-                *key_cols, id_col, "simhash", "_sub",
-                F.col("_g.gi").alias("_gi"), F.col("_g.gj").alias("_gj"),
-            )
-        )
-        seg_cols = list(key_cols) + ["_gi", "_gj"]
-        sort_cols = seg_cols + ["_sub"]
-        shuffle_cols = seg_cols
-    else:
-        sk = sk.withColumn("_sub", F.lit(0).cast("int"))
-        seg_cols = list(key_cols)
-        sort_cols = seg_cols
-        shuffle_cols = seg_cols
 
     def _empty():
         d = {
@@ -781,90 +719,43 @@ def _bucketed_hamming_pairs(
         return pd.DataFrame(d)
 
     def gen(it):
-        chunks = [p for p in it if len(p)]
-        if not chunks:
-            return
-        pdf = (
-            chunks[0]
-            if len(chunks) == 1
-            else pd.concat(chunks, ignore_index=True)
+        seen = emitted = False
+        segs = _whole_segments(
+            it, lambda p: p["_packed"].to_numpy(np.int64) >> sb
         )
-        n = len(pdf)
-        if packed_mode:
+        for pdf in segs:
+            seen = True
+            n = len(pdf)
             pk = pdf["_packed"].to_numpy(np.int64)
-            keyarrs = [pk >> sb]  # segment identity excludes sub
-        else:
-            keyarrs = [pdf[c].to_numpy(np.int64) for c in seg_cols]
-        ids = pdf[id_col].to_numpy(np.int64)
-        sks = pdf["simhash"].to_numpy(np.int64)
-        # 32-bit fast path: xor + popcount at half the memory traffic
-        # (identical hamming values — pinned by the parity suite)
-        sks32 = (
-            sks.astype(np.uint32)
-            if n and 0 <= sks.min() and sks.max() < (1 << 32)
-            else None
-        )
-        change = np.zeros(n, dtype=bool)
-        for a in keyarrs:
-            change[1:] |= a[1:] != a[:-1]
-        starts = np.concatenate([[0], np.flatnonzero(change[1:]) + 1])
-        lens = np.diff(np.concatenate([starts, [n]]))
-        seg_of_row = np.repeat(np.arange(len(starts)), lens)
-        pos = np.arange(n) - starts[seg_of_row]
-        if n_sub > 1:
-            if packed_mode:
+            ids = pdf[id_col].to_numpy(np.int64)
+            sks = pdf["simhash"].to_numpy(np.int64)
+            # 32-bit fast path: xor + popcount at half the memory traffic
+            # (identical hamming values — pinned by the parity suite)
+            sks32 = (
+                sks.astype(np.uint32)
+                if 0 <= sks.min() and sks.max() < (1 << 32)
+                else None
+            )
+            starts, lens, seg_of_row, pos = _segment_runs(pk >> sb)
+            if n_sub > 1:
                 submask = (1 << sb) - 1
-                seg_start = keyarrs[0][starts]
+                seg_start = pk[starts] >> sb
                 gi = (seg_start >> sb) & submask
                 gj = seg_start & submask
-                subv = pk & submask
+                diag = (gi == gj)[seg_of_row]
+                # cross segments: a-side (sub == gi) sorts first
+                is_a = (pk & submask) == gi[seg_of_row]
+                n_a = np.add.reduceat(is_a.astype(np.int64), starts)
+                cross_r = np.where(is_a, (lens - n_a)[seg_of_row], 0)
+                rep = np.where(diag, lens[seg_of_row] - pos - 1, cross_r)
+                # partner base index: next row (diag) / b-side start (cross)
+                base = np.where(
+                    diag, np.arange(n) + 1, (starts + n_a)[seg_of_row]
+                )
             else:
-                gi = pdf["_gi"].to_numpy(np.int64)[starts]
-                gj = pdf["_gj"].to_numpy(np.int64)[starts]
-                subv = pdf["_sub"].to_numpy(np.int64)
-            diag_seg = gi == gj
-            # cross segments: a-side (sub == gi) sorts first
-            is_a = subv == gi[seg_of_row]
-            n_a = np.add.reduceat(is_a.astype(np.int64), starts)
-            n_b = lens - n_a
-            diag_r = lens[seg_of_row] - pos - 1
-            cross_r = np.where(is_a, n_b[seg_of_row], 0)
-            rep = np.where(diag_seg[seg_of_row], diag_r, cross_r)
-            # partner base index: next row (diag) / b-side start (cross)
-            b_start = starts + n_a
-            base = np.where(
-                diag_seg[seg_of_row],
-                np.arange(n) + 1,
-                b_start[seg_of_row],
-            )
-        else:
-            rep = lens[seg_of_row] - pos - 1
-            base = np.arange(n) + 1
-        csum = np.concatenate([[0], np.cumsum(rep)])
-        total = int(csum[-1])
-        if total == 0:
-            yield _empty()
-            return
-        CHUNK = 4_000_000
-        emitted = False
-        lo_row = 0
-        while lo_row < n:
-            hi_row = int(
-                np.searchsorted(csum, csum[lo_row] + CHUNK, side="left")
-            )
-            hi_row = min(max(hi_row, lo_row + 1), n)
-            r = rep[lo_row:hi_row]
-            t = int(r.sum())
-            if t:
-                idx_t = np.int32 if n < (1 << 31) else np.int64
-                a_idx = np.repeat(
-                    np.arange(lo_row, hi_row, dtype=idx_t), r
-                )
-                w = np.arange(t, dtype=idx_t) - np.repeat(
-                    np.cumsum(np.concatenate([[0], r[:-1]])).astype(idx_t),
-                    r,
-                )
-                b_idx = base[a_idx] + w
+                rep = lens[seg_of_row] - pos - 1
+                base = np.arange(n) + 1
+            for a_idx, b_idx in _pair_chunks(rep, base):
                 if sks32 is not None:
                     ham = _popcount32(sks32[a_idx] ^ sks32[b_idx]).astype(
                         np.int64
@@ -884,32 +775,112 @@ def _bucketed_hamming_pairs(
                         d["hamming"] = ham.astype(np.int32)
                     emitted = True
                     yield pd.DataFrame(d)
-            lo_row = hi_row
-        if not emitted:
+        if seen and not emitted:
             yield _empty()
 
-    # explicit N: same AQE-coalescing hazard as _segment_pairs — the
-    # sketch stream is tiny in bytes (AQE folded sf1.0's 1.6M rows to
-    # 13 partitions) but pair enumeration is quadratic per segment, so
-    # the n_sub spread only works if the partition count holds
-    n_part = int(sk.sparkSession.conf.get("spark.sql.shuffle.partitions"))
-    if packed_mode:
-        # shuffle on the segment identity (sub excluded — every row of
-        # a segment must land together), sort on the full packed key
-        part = sk.repartition(
-            n_part, F.shiftright(F.col("_packed"), sb)
-        ).sortWithinPartitions("_packed")
-        sel = ["_packed", id_col, "simhash"]
+    return gen
+
+
+def _bucketed_hamming_pairs(
+    sk: DataFrame,
+    key_cols: list[str],
+    id_col: str,
+    max_hamming: int | None,
+    emit_hamming: bool,
+    key_widths: list[int],
+    n_sub: int = 1,
+) -> DataFrame:
+    """Within-bucket pair enumeration + popcount verify, fully
+    vectorized: shuffle the sketch rows once on the bucket key(s),
+    sort within partitions, and emit every same-bucket (id_a < id_b)
+    pair from ONE ``mapInPandas`` pass — pair construction is the
+    repeat/offset trick over segment run-lengths (zero Python per
+    group; a per-group ``applyInPandas`` paid ~0.5 ms × tens of
+    thousands of near-empty buckets, slower than the join it
+    replaced). Hamming is a popcount over the xor'd sketch pairs via
+    the 16-bit lookup table (:func:`_popcount32` / :func:`_popcount64`);
+    ``max_hamming`` filters, ``emit_hamming`` keeps the column. The
+    kernel streams whole segments and chunks pair construction, as
+    :func:`_segment_pairs` does, so the live arrays stay bounded even
+    when one bucket is quadratic-hot.
+
+    ``key_widths`` gives the bit width of each key column (values are
+    non-negative and below ``2^width``; every caller derives the widths
+    from a range-checked parameter). The keys, the sub-block pair and
+    the sub-block are packed into ONE long, so the Arrow crossing ships
+    3 columns instead of 7 and the JVM sort compares one long —
+    measured several-fold on the per-task read wall at 32 concurrent
+    local tasks. The packed long sorts exactly like the multi-column
+    (keys..., gi, gj, sub) order (non-negative fields, high-to-low
+    layout).
+
+    ``n_sub`` > 1 splits every bucket into ``n_sub`` deterministic
+    id-hash sub-blocks and keys the shuffle on (bucket, sub-block
+    PAIR) — a quadratic-hot bucket's pair work then spreads over
+    n_sub·(n_sub+1)/2 partitions instead of serializing on one core
+    (measured: one 13 k-doc block bucket ≈ 90 M pairs on the blocked
+    simhash at sf1.0). Every unordered pair still lands in exactly
+    one (gi ≤ gj) group, so results are identical."""
+    if len(key_widths) != len(key_cols):
+        raise ValueError("key_widths must align with key_cols")
+    sb = max(1, (n_sub - 1).bit_length())  # bits for each of gi/gj/sub
+    if sum(key_widths) + 3 * sb > 62:
+        raise ValueError("packed segment key exceeds 62 bits")
+    # null sketches (null text) never join on their bucket in the join
+    # form — drop them before pairing, same semantics
+    sk = sk.filter(F.col("simhash").isNotNull())
+    kp = F.col(key_cols[0]).cast("long")
+    for c, w in zip(key_cols[1:], key_widths[1:]):
+        kp = F.shiftleft(kp, w).bitwiseOR(F.col(c).cast("long"))
+    if n_sub > 1:
+        sub = F.pmod(F.xxhash64(F.col(id_col)), F.lit(n_sub)).cast("long")
+        grp = F.array(
+            *[
+                F.struct(
+                    F.least(F.col("_sub"), F.lit(q)).alias("gi"),
+                    F.greatest(F.col("_sub"), F.lit(q)).alias("gj"),
+                )
+                for q in range(n_sub)
+            ]
+        )
+        sk = sk.withColumn("_kp", kp).withColumn("_sub", sub).select(
+            "_kp", id_col, "simhash", "_sub", F.explode(grp).alias("_g")
+        )
+        packed = F.col("_kp")
+        for field in ("_g.gi", "_g.gj", "_sub"):
+            packed = F.shiftleft(packed, sb).bitwiseOR(
+                F.col(field).cast("long")
+            )
     else:
-        part = sk.repartition(
-            n_part, *[F.col(c) for c in shuffle_cols]
-        ).sortWithinPartitions(*sort_cols)
-        sel = list(dict.fromkeys(sort_cols + [id_col, "simhash"]))
-    schema = f"id_a long, id_b long" + (
+        packed = F.shiftleft(kp, 3 * sb)
+    sk = sk.select(packed.alias("_packed"), id_col, "simhash")
+    schema = "id_a long, id_b long" + (
         ", hamming integer" if emit_hamming else ""
     )
-    return part.select(*sel).mapInPandas(gen, schema=schema).select(
-        *out_cols
+    # shuffle on the segment identity (sub excluded — every row of a
+    # segment must land together), sort on the full packed key; the
+    # sketch stream is tiny in bytes (AQE folded sf1.0's 1.6M rows to
+    # 13 partitions), so the n_sub spread only works pinned
+    return _sorted_segments(
+        sk, F.shiftright(F.col("_packed"), sb), "_packed"
+    ).mapInPandas(
+        _hamming_pair_gen(id_col, sb, n_sub, max_hamming, emit_hamming),
+        schema=schema,
+    )
+
+
+def _prefix_buckets(
+    df: DataFrame, id_col: str, text_col: str, prefix_bits: int, hash_fn: str
+) -> DataFrame:
+    """Sketch rows plus ``bucket``, the top ``prefix_bits`` of the
+    32-bit sketch. ``prefix_bits`` must lie in [1, 32]: above 32 the
+    shift amount goes negative and the JVM takes it mod 64, so every
+    doc would land silently in bucket 0 — an O(n²) pass with the wrong
+    candidate set."""
+    if not 1 <= prefix_bits <= 32:
+        raise ValueError(f"prefix_bits must be in [1, 32], got {prefix_bits}")
+    return simhash(df, id_col, text_col, hash_fn=hash_fn).withColumn(
+        "bucket", F.shiftright("simhash", 32 - prefix_bits)
     )
 
 
@@ -935,11 +906,9 @@ def simhash_candidate_pairs(
     duplicate ids would previously have been collapsed by the
     distinct — that degenerate input is excluded by contract, as in
     the oracle.)"""
-    sk = simhash(df, id_col, text_col, hash_fn=hash_fn).withColumn(
-        "bucket", F.shiftright("simhash", 32 - prefix_bits)
-    )
     return _bucketed_hamming_pairs(
-        sk, ["bucket"], id_col, None, emit_hamming=False,
+        _prefix_buckets(df, id_col, text_col, prefix_bits, hash_fn),
+        ["bucket"], id_col, None, emit_hamming=False,
         key_widths=[prefix_bits],  # bucket < 2^prefix_bits
     )
 
@@ -961,9 +930,7 @@ def simhash_neardup_pairs(
     prefix table as the (documented) recall trade-off: rotations/
     multi-prefix tables extend it the same way the SRP multi-table
     construction does in similarity.py."""
-    sk = simhash(df, id_col, text_col, hash_fn=hash_fn).withColumn(
-        "bucket", F.shiftright("simhash", 32 - prefix_bits)
-    )
+    sk = _prefix_buckets(df, id_col, text_col, prefix_bits, hash_fn)
     # segment-wise pair enumeration + numpy popcount verify (r7): one
     # shuffle of |docs| sketch rows replaces the self-join's double
     # sketch evaluation and per-candidate JVM verify; each doc has one
@@ -1033,10 +1000,10 @@ def simhash_neardup_pairs_blocked(
     # pairs, 90 M in ONE bucket at sf1.0) — the sub-block split
     # spreads a hot bucket's pair grid over 36 partitions
     return _bucketed_hamming_pairs(
-        tb, ["tbl", "bucket"], id_col, max_hamming,
-        emit_hamming=True, n_sub=8,
+        tb, ["tbl", "bucket"], id_col, max_hamming, emit_hamming=True,
         # tbl < n_blocks, bucket < 2^block_bits
         key_widths=[max(1, (n_blocks - 1).bit_length()), block_bits],
+        n_sub=8,
     ).distinct()
 
 

@@ -136,7 +136,11 @@ def _round4_half_up(v: "object") -> "object":
     scale + floor HALF_UP; values within 1e-6 (in scaled units) of a
     .5 boundary are resolved with decimal HALF_UP over the shortest
     round-trip repr, the same BigDecimal.valueOf(double) semantics
-    Spark's Round uses."""
+    Spark's Round uses. That assumes Java's ``Double.toString`` gives
+    the shortest round-trip digits, as Python's ``repr`` does — true
+    on JDK 19 and later; older JDKs can print non-shortest digits
+    (JDK-4511638), which could flip a share lying exactly on a
+    .00005 boundary."""
     import numpy as np
 
     x = v * 10000.0

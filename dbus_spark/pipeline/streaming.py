@@ -181,7 +181,8 @@ class StreamingPipeline:
         be checkpoint-compatible per Spark's usual stateful-operator
         evolution rules (adding sinks/routes or changing stateless
         transforms is fine; reshaping stateful operators is not)."""
-        assert self._spark is not None, "pipeline not started"
+        if self._spark is None:
+            raise RuntimeError("pipeline not started")
         self.stop()
         self.pipeline = new_pipeline
         self.queries = {}
@@ -197,7 +198,8 @@ class StreamingPipeline:
         self.queries[name].awaitTermination(60)
 
     def resume(self, name: str) -> None:
-        assert self._spark is not None, "pipeline not started"
+        if self._spark is None:
+            raise RuntimeError("pipeline not started")
         self.queries[name] = self._start_one(self._spark, name)
 
     # -- introspection ---------------------------------------------------

@@ -106,3 +106,12 @@ def get_spark(
     for k, v in (extra_confs or {}).items():
         builder = builder.config(k, v)
     return builder.getOrCreate()
+
+
+def shuffle_partition_count(spark: SparkSession) -> int:
+    """The session's ``spark.sql.shuffle.partitions`` — the N that the
+    pair and verify kernels pin their repartition(N, cols) to, so AQE
+    cannot coalesce a quadratic-work stage by bytes. The value is
+    always an integer: Spark rejects a non-numeric setting (such as
+    ``auto``) when it is set."""
+    return int(spark.conf.get("spark.sql.shuffle.partitions"))

@@ -12,6 +12,7 @@ import pytest
 from dbus_spark.operators.cep import (
     classify,
     funnel,
+    match_quantified,
     match_runs,
     match_sequence,
     streaming_match_sequence,
@@ -91,6 +92,22 @@ def test_classify_precedence_and_default(spark):
     got = {r["id"]: r["sym"] for r in out.collect()}
     # dict order = precedence: 'user' rows take U, not ANY
     assert got == {1: "U", 2: "ANY", 3: None}
+
+
+def test_empty_pattern_raises(spark):
+    """Argument checks are explicit errors, not asserts that
+    ``python -O`` strips."""
+    df = spark.createDataFrame(
+        [("c", 0, "user")], "conv_id string, turn_idx int, sym string"
+    )
+    with pytest.raises(ValueError):
+        match_sequence(df, [])
+    with pytest.raises(ValueError):
+        match_quantified(df, [])
+    with pytest.raises(ValueError):
+        match_quantified(df, [("user", 0, None)])
+    with pytest.raises(ValueError):
+        funnel(df, [])
 
 
 def test_match_sequence_vs_pandas(turns_df, turns_pd):

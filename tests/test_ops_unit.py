@@ -470,6 +470,14 @@ def test_simhash_wide_sketch_exact_and_validated(spark):
         D.simhash(df, n_bits=61)
     with _pytest.raises(ValueError):
         D.simhash_neardup_pairs_blocked(df, n_bits=62)
+    # a prefix wider than the 32-bit sketch shifts by a negative amount
+    # (taken mod 64 by the JVM: every doc in bucket 0), and an empty
+    # prefix is one bucket — both rejected before any plan is built
+    for prefix_bits in (0, 33, 40):
+        with _pytest.raises(ValueError):
+            D.simhash_candidate_pairs(df, prefix_bits=prefix_bits)
+        with _pytest.raises(ValueError):
+            D.simhash_neardup_pairs(df, prefix_bits=prefix_bits)
 
 
 def test_ordering_state_wire_format_versioned_and_legacy():
