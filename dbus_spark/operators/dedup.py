@@ -971,6 +971,12 @@ def simhash_neardup_pairs_blocked(
     verify is a codegen'd ``bit_count(xor)``, no second join."""
     if not 1 <= n_bits <= 60:
         raise ValueError(f"n_bits must be in [1, 60], got {n_bits}")
+    # >= n_bits leaves 0-bit blocks (every doc in bucket 0: an O(n^2)
+    # pass); a negative value builds no blocks (silently no pairs)
+    if not 0 <= max_hamming <= n_bits - 1:
+        raise ValueError(
+            f"max_hamming must be in [0, {n_bits - 1}], got {max_hamming}"
+        )
     n_blocks = max_hamming + 1
     block_bits = n_bits // n_blocks
     sk = simhash(df, id_col, text_col, n_bits, hash_fn)

@@ -569,8 +569,8 @@ def kmeans_centroids(
     # is unchanged (the 100 TB shape: one scan per round, partial
     # sums to the driver).
     train = df.select(id_col, vec_col)
-    n_rows = train.count()
-    if n_rows <= small_input_threshold:
+    # the strategy needs only "more than the threshold?", not the size
+    if train.limit(small_input_threshold + 1).count() <= small_input_threshold:
         pdf = train.toPandas()
         ids = pdf[id_col].to_numpy()
         order = np.argsort(ids, kind="stable")

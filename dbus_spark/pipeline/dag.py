@@ -313,12 +313,7 @@ def _idempotent_output(options: dict) -> Callable:
     def fn(df: DataFrame, name: str):
         from dbus_spark.sinks import IdempotentKeyedSink
 
-        sink = IdempotentKeyedSink(
-            options["path"],
-            keys=options.get("keys", ["conv_id", "turn_idx"]),
-            dedup_mode=options.get("dedup_mode", "anti_join"),
-            track_counts=bool(options.get("track_counts", True)),
-        )
+        sink = IdempotentKeyedSink.from_options(options)
         return sink.write_batch(df, int(options.get("batch_id", 0)))
 
     return fn

@@ -80,12 +80,7 @@ def _parquet_stream(options: dict) -> Callable:
 
 def _idempotent_stream(options: dict) -> Callable:
     def fn(df: DataFrame, name: str, ckpt: str) -> StreamingQuery:
-        sink = IdempotentKeyedSink(
-            options["path"],
-            keys=options.get("keys", ["conv_id", "turn_idx"]),
-            dedup_mode=options.get("dedup_mode", "anti_join"),
-            track_counts=bool(options.get("track_counts", True)),
-        )
+        sink = IdempotentKeyedSink.from_options(options)
         return (
             df.writeStream.outputMode(options.get("output_mode", "append"))
             .foreachBatch(sink.foreach_batch())

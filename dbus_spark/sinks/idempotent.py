@@ -20,9 +20,8 @@ with three mechanisms, strongest first:
 3. **key-level anti-join MERGE** (``dedup_mode="anti_join"``): for
    upstreams that can re-emit a key in a *different* epoch (raw
    at-least-once streams), only keys absent from all other epochs are
-   kept. The probe excludes the current epoch's partition (partition
-   pruning on the ``batch`` column), so a failed partial write never
-   blocks its own retry.
+   kept. The probe reads every other epoch's directory, never the
+   current one, so a failed partial write never blocks its own retry.
 
 On a production cluster the target is an Iceberg table and the whole
 sink is a single ``MERGE INTO t USING batch ON (conv_id, turn_idx)
@@ -37,8 +36,9 @@ from __future__ import annotations
 import json
 import os
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import IntegralType, LongType, StructField, StructType
 
 
 class IdempotentKeyedSink:
@@ -73,10 +73,8 @@ class IdempotentKeyedSink:
             {"conv_id": "string", "turn_idx": "int"} if keys is None else {}
         )
         self.dedup_mode = dedup_mode
-        # per-epoch row counts in the markers cost one extra job per
-        # micro-batch (persist + count); turn off on latency-sensitive
-        # paths — exactly the reference's RouterTrack lesson (metrics
-        # on the hot path cost 2.1M->1.6M pkt/s, engine/router.go:111)
+        # per-epoch row counts in the markers, observed in the write (no
+        # extra job); off records null (RouterTrack, engine/router.go:111)
         self.track_counts = track_counts
         # aggregated micro-batch output is often tiny relative to the
         # upstream shuffle width; writing shuffle-partition-many files
@@ -87,6 +85,16 @@ class IdempotentKeyedSink:
         self.meta_path = os.path.join(path, "_batches")
         os.makedirs(self.data_path, exist_ok=True)
         os.makedirs(self.meta_path, exist_ok=True)
+
+    @classmethod
+    def from_options(cls, options: dict) -> "IdempotentKeyedSink":
+        """The sink an ``IdempotentOutput`` plugin's options describe."""
+        return cls(
+            options["path"],
+            keys=options.get("keys", ["conv_id", "turn_idx"]),
+            dedup_mode=options.get("dedup_mode", "anti_join"),
+            track_counts=bool(options.get("track_counts", True)),
+        )
 
     # -- bookkeeping ---------------------------------------------------
 
@@ -106,45 +114,44 @@ class IdempotentKeyedSink:
         return os.path.join(self.data_path, f"batch={batch_id}")
 
     def _epoch_ids(self) -> list[int]:
-        if not os.path.isdir(self.data_path):
-            return []
-        return [
-            int(d.split("=", 1)[1])
-            for d in os.listdir(self.data_path)
-            if d.startswith("batch=")
-        ]
+        names = os.listdir(self.data_path) if os.path.isdir(self.data_path) else []
+        return [int(d.split("=", 1)[1]) for d in names if d.startswith("batch=")]
 
     # -- the MERGE -----------------------------------------------------
 
     def write_batch(self, batch_df: DataFrame, batch_id: int) -> int:
-        """Apply one micro-batch; returns rows written to its epoch."""
+        """Apply one micro-batch in one pass; returns rows written to its
+        epoch. The probe lists every other epoch: past Spark's 32-path
+        parallel-listing threshold that is one more job per write
+        (bounding it is the ``merge_sql()`` form)."""
         if self.committed(batch_id):
             # already durable: drain the batch (Spark 4.x validates that
             # foreachBatch consumes every partition) and do nothing
             batch_df.write.format("noop").mode("overwrite").save()
             return 0
-        spark = batch_df.sparkSession
         fresh = batch_df.dropDuplicates(self.keys)
-        others = [b for b in self._epoch_ids() if b != batch_id]
+        others = [self._epoch_dir(b) for b in self._epoch_ids() if b != batch_id]
         if self.dedup_mode == "anti_join" and others:
-            existing_keys = (
-                spark.read.parquet(self.data_path)
-                .filter(F.col("batch") != batch_id)
-                .select(*self.keys)
-            )
-            fresh = fresh.join(existing_keys, on=self.keys, how="left_anti")
+            # a known schema: no inference job. Integral keys read as
+            # long, so an epoch stored wider than this batch still probes
+            keys = StructType([
+                StructField(f.name, LongType())
+                if isinstance(f.dataType, IntegralType) else f
+                for f in batch_df.select(*self.keys).schema
+            ])
+            probe = batch_df.sparkSession.read.schema(keys).parquet(*others)
+            fresh = fresh.join(probe, on=self.keys, how="left_anti")
         if self.coalesce_output:
             fresh = fresh.coalesce(self.coalesce_output)
         if self.track_counts:
-            fresh = fresh.persist()
-            n = fresh.count()
-        else:
-            n = None
+            # last, so it sits in the write's result stage: each
+            # partition is counted once, even across task retries
+            seen = Observation()
+            fresh = fresh.observe(seen, F.count(F.lit(1)).alias("n"))
         # overwrite THIS epoch's partition: replays and partial writes
         # of the same epoch converge to the same bytes
         fresh.write.mode("overwrite").parquet(self._epoch_dir(batch_id))
-        if self.track_counts:
-            fresh.unpersist()
+        n = seen.get["n"] if self.track_counts else None
         self._commit_marker(batch_id, n)
         return n if n is not None else 0
 
@@ -170,9 +177,7 @@ class IdempotentKeyedSink:
                     for k in self.keys
                 ),
             )
-        out = spark.read.option("basePath", self.data_path).parquet(
-            self.data_path
-        )
+        out = spark.read.option("basePath", self.data_path).parquet(self.data_path)
         if len(committed) != len(all_ids):  # phantom (markerless) epochs
             out = out.filter(F.col("batch").isin(committed))
         return out.drop("batch")
@@ -187,20 +192,14 @@ class IdempotentKeyedSink:
         landed when batch N committed?") and the input pin for a
         backfill diff.  Partition pruning keeps it cheap: the `batch`
         partition column filter never touches later epochs' files."""
-        ids = [
-            b
-            for b in self._epoch_ids()
-            if b <= epoch and self.committed(b)
-        ]
+        ids = [b for b in self._epoch_ids() if b <= epoch and self.committed(b)]
         if not ids:
             return self.read(spark).limit(0)
         return (
             spark.read.option("basePath", self.data_path)
             .parquet(self.data_path)
             # COMMITTED epochs only, not merely <= epoch: a crashed
-            # write leaves an epoch directory without its marker, and
-            # a snapshot must never expose it (markers gate visibility
-            # exactly as in write_batch's replay check)
+            # write's markerless epoch directory must stay hidden
             .filter(F.col("batch").isin(ids))
             .drop("batch")
         )

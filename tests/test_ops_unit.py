@@ -478,6 +478,43 @@ def test_simhash_wide_sketch_exact_and_validated(spark):
             D.simhash_candidate_pairs(df, prefix_bits=prefix_bits)
         with _pytest.raises(ValueError):
             D.simhash_neardup_pairs(df, prefix_bits=prefix_bits)
+    # max_hamming >= n_bits gives 0-bit blocks (every doc in bucket 0,
+    # an O(n^2) pass) and a negative one builds no blocks (no pairs)
+    for n_bits, max_hamming in ((32, -1), (32, 32), (32, 40), (8, 8)):
+        with _pytest.raises(ValueError):
+            D.simhash_neardup_pairs_blocked(
+                df, max_hamming=max_hamming, n_bits=n_bits
+            )
+    D.simhash_neardup_pairs_blocked(df, max_hamming=31)  # 1-bit blocks
+
+
+def test_kmeans_strategy_probe_boundary(spark, monkeypatch):
+    """The local/distributed choice is made on a limit(threshold + 1)
+    probe: N rows with threshold N train locally, N - 1 distributed."""
+    rng = np.random.default_rng(3)
+    n = 12
+    df = spark.createDataFrame(
+        pd.DataFrame(
+            {
+                "vec_id": np.arange(n),
+                "embedding": list(rng.normal(size=(n, 4))),
+            }
+        )
+    )
+    calls = []
+    local = S.kmeans_centroids_local
+
+    def spy(*a, **k):
+        calls.append(1)
+        return local(*a, **k)
+
+    monkeypatch.setattr(S, "kmeans_centroids_local", spy)
+    kw = dict(dim=4, n_centroids=2, n_iter=1)
+    got_local = S.kmeans_centroids(df, small_input_threshold=n, **kw)
+    assert calls == [1]
+    got_dist = S.kmeans_centroids(df, small_input_threshold=n - 1, **kw)
+    assert calls == [1]  # the distributed path never calls the replica
+    assert got_local == got_dist  # same centroids either way
 
 
 def test_ordering_state_wire_format_versioned_and_legacy():

@@ -271,3 +271,96 @@ def test_read_hides_uncommitted_epoch(spark, tmp_path):
         os.path.join(str(tmp_path / "out2"), "data", "batch=0")
     )
     assert sink2.read(spark).count() == 0
+
+
+def _marker_rows(sink, batch_id):
+    import json
+
+    with open(sink._marker(batch_id)) as f:
+        return json.load(f)["rows_appended"]
+
+
+def test_anti_join_epoch_is_one_pass(spark, tmp_path, df):
+    """An anti-join epoch with counts on and a prior epoch to probe runs
+    the micro-batch once: the key probe reads with a known schema (no
+    inference job) and the count is observed in the write (no persist +
+    count job) — at most 3 Spark jobs, where the two-pass form took 7."""
+    sink = _sink(tmp_path, "anti_join")
+    sink.write_batch(df, 0)
+    more = spark.createDataFrame(
+        [("c1", 2, "b"), ("c1", 3, "c"), ("c2", 1, "d")],
+        ["conv_id", "turn_idx", "text"],
+    )
+    sc = spark.sparkContext
+    group = f"one-pass-{tmp_path.name}"
+    sc.setJobGroup(group, "one anti-join epoch")
+    try:
+        assert sink.write_batch(more, 1) == 2
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert len(sc.statusTracker().getJobIdsForGroup(group)) <= 3
+
+
+def test_marker_rows_match_rows_written(spark, tmp_path, df):
+    """rows_appended, the return value and the epoch's rows agree for
+    new keys, a full redelivery, an empty batch, a batch filtered to
+    empty, and a coalesced epoch (the fused stage-A shape)."""
+    schema = "conv_id string, turn_idx long, text string"
+    more = spark.createDataFrame(
+        [("c1", 2, "b"), ("c1", 3, "c"), ("c2", 1, "d")], schema
+    )
+    sink = _sink(tmp_path, "anti_join")
+    epochs = [
+        (df, 2),  # new keys (3 rows, one in-batch duplicate)
+        (more, 2),  # one key already landed in epoch 0
+        (df, 0),  # fully redelivered
+        (spark.createDataFrame([], schema), 0),
+        (more.filter("turn_idx < 0"), 0),
+    ]
+    for epoch, (batch, want) in enumerate(epochs):
+        assert sink.write_batch(batch, epoch) == want
+        assert _marker_rows(sink, epoch) == want
+        written = spark.read.parquet(sink._epoch_dir(epoch)).count()
+        assert written == want
+    assert sink.read(spark).count() == 4
+
+    from dbus_spark.sinks import IdempotentKeyedSink
+
+    fused = IdempotentKeyedSink(
+        str(tmp_path / "fused"),
+        keys=["conv_id", "turn_idx"],
+        coalesce_output=1,
+    )
+    for epoch, want in ((0, 2), (1, 2)):
+        batch = (df, more)[epoch]
+        assert fused.write_batch(batch, epoch) == want
+        assert _marker_rows(fused, epoch) == want
+        parts = [
+            f
+            for f in os.listdir(fused._epoch_dir(epoch))
+            if f.endswith(".parquet")
+        ]
+        assert len(parts) == 1
+        written = spark.read.parquet(fused._epoch_dir(epoch)).count()
+        assert written == want
+
+
+def test_anti_join_probe_reads_keys_stored_wider(spark, tmp_path):
+    """The probe's schema comes from the batch, not the files: an epoch
+    stored with a wider integer key than the current batch's (a pandas
+    int64 backfill, then a stream typed int) still probes and dedups."""
+    sink = _sink(tmp_path, "anti_join")
+    sink.write_batch(
+        spark.createDataFrame(
+            [("c1", 1, "a"), ("c1", 2, "b")],
+            "conv_id string, turn_idx long, text string",
+        ),
+        0,
+    )
+    narrow = spark.createDataFrame(
+        [("c1", 2, "b"), ("c1", 3, "c")],
+        "conv_id string, turn_idx int, text string",
+    )
+    assert sink.write_batch(narrow, 1) == 1
+    got = spark.read.parquet(sink._epoch_dir(1)).collect()
+    assert [r.turn_idx for r in got] == [3]
